@@ -7,14 +7,16 @@ with NaN for inactive cells.
 
 Spark redesign (ONE lazy plan for the whole fleet):
 
-    states ─ posexplode ─┐
-                         ├─ J2 positional zip (arrays_zip + posexplode)
-    actnum ─ filter ─────┤
-                         ├─ P3 bounds filter (row_idx < n_active)
-                         ├─ J1 scatter = dense cells LEFT JOIN values
-    dims ─ literals ─────┘
-                         └─ F12 (i,j,k) from cell_id → golden long Parquet
-                             partitioned by sim_hash
+    actnum ─ pos array ─ broadcast ─┐   one row per sim: pos[c] = rank of cell
+                                    │   c among active cells, NULL if inactive
+    states ─ posexplode ────────────┤   one row per (sim, t): pressure[], s[]
+                                    ├─ LEFT hash join on sim_hash
+                                    ├─ J1 scatter = explode(0 .. ncells-1),
+                                    │  value = get(pressure, pos[c]); get() is
+                                    │  NULL past the array end, which is the
+                                    │  P3 bounds filter
+                                    └─ F12 (i,j,k) from cell_id → golden long
+                                       Parquet partitioned by sim_hash
 
 The canonical store is the LONG format (sim_hash, t, cell_id, i, j, k,
 pressure, sw, sg); NULL = inactive cell (the reference's NaN). Dense
@@ -22,18 +24,23 @@ tensors exist only in export sinks (exports.py). Partitioning by sim_hash
 makes per-sim queries partition-pruned scans; within a partition rows are
 sorted by (t, cell_id) for row-group skipping on timestep predicates.
 
-Scale: no driver-side loops, no collect; the scatter join is a shuffle on
-(sim_hash, t, row-position) whose skew (sims with varying active counts) is
-handled by AQE skew-join splitting (session.py).
+Scale: no driver-side loops, no collect, no cell-level join. Each source is
+scanned once, and each bronze file is read whole by one task. The ACTNUM
+side is one row per sim holding ncells ints. While it fits
+spark.sql.autoBroadcastJoinThreshold it is broadcast, and the states rows
+never leave the task that parsed them. A fleet past the threshold gets a
+hash join on sim_hash instead, which shuffles one row per (sim, t), never
+one per cell. Per sim the plan sorts ncells (cell, rank) pairs once for the
+position array and does T · ncells array lookups.
 """
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 
 from pumle_spark.functions.grid import ijk_exprs
-from pumle_spark.sources.bronze import read_actnum, read_grid_dims, read_states
+from pumle_spark.sources.bronze import read_actnum_arrays, read_grid_dims, read_states
 
 
 def active_index(actnum: DataFrame) -> DataFrame:
@@ -76,6 +83,28 @@ def states_long(states: DataFrame) -> DataFrame:
     )
 
 
+def active_positions(actnum: Column) -> Column:
+    """P2 as one array per sim: pos[c] is cell c's rank among the active
+    cells (active_index's row_idx), NULL for an inactive cell.
+
+    The active cell ids, in cell order, carry their rank as their array
+    index. Tagging them and the inactive ids with (cell, rank) and sorting
+    by cell turns rank → cell into cell → rank without leaving the row.
+    """
+    cells = F.transform(
+        actnum, lambda x, c: F.struct(c.alias("c"), F.coalesce(x != 0, F.lit(False)).alias("on"))
+    )
+    ranked = F.transform(
+        F.filter(cells, lambda e: e["on"]),
+        lambda e, r: F.struct(e["c"].alias("c"), r.alias("r")),
+    )
+    unranked = F.transform(
+        F.filter(cells, lambda e: ~e["on"]),
+        lambda e: F.struct(e["c"].alias("c"), F.lit(None).cast("int").alias("r")),
+    )
+    return F.transform(F.sort_array(F.concat(ranked, unranked)), lambda e: e["r"])
+
+
 def ingest_golden(
     spark: SparkSession,
     states_glob: str,
@@ -89,37 +118,60 @@ def ingest_golden(
     ni, nj, nk = read_grid_dims(spark, dims_path)
     ncells = ni * nj * nk
 
-    actnum = read_actnum(spark, actnum_glob)
-    act_idx = active_index(actnum)
-    values = states_long(read_states(spark, states_glob))
-
-    # P3 bounds guard (arrays.py:106-110, sim_results_parser.py:295-300):
-    # drop state rows beyond the sim's active count and active indices
-    # beyond the grid — an inner join on (sim_hash, row_idx) does both:
-    # unmatched positions on either side vanish, matching the reference's
-    # "skip with warning" semantics declaratively.
-    obs = values.join(act_idx, ["sim_hash", "row_idx"]).select(
-        "sim_hash", "t", "cell_id", "pressure", "sw", "sg"
+    positions = read_actnum_arrays(spark, actnum_glob).select(
+        "sim_hash", active_positions(F.col("actnum")).alias("pos")
     )
+    # A timestep whose pressure/s zip is NULL or empty yields no state rows
+    # (states_long), so it has no golden rows either.
+    states = read_states(spark, states_glob).filter(F.size(F.arrays_zip("pressure", "s")) > 0)
 
-    # J1 scatter: dense (sim_hash × t × cell_id) domain LEFT JOIN observations.
-    sims_t = values.select("sim_hash", "t").distinct()
-    all_cells = spark.range(ncells).select(F.col("id").alias("cell_id"))
-    dense = sims_t.crossJoin(all_cells)
-
-    golden = dense.join(obs, ["sim_hash", "t", "cell_id"], "left")
-
-    i, j, k = ijk_exprs(F.col("cell_id"), ni, nj)
-    return golden.select("sim_hash", "t", "cell_id", i, j, k, "pressure", "sw", "sg")
+    # J1 scatter: one generated row per cell. A sim without ACTNUM has a
+    # NULL pos, so all its cells are NULL. P3 bounds guard (arrays.py:106-110,
+    # sim_results_parser.py:295-300): get() is NULL for an index past the
+    # array end, so cells past ACTNUM and state rows past the active count
+    # both drop out of the lookup, the reference's "skip with warning".
+    scattered = states.join(positions, "sim_hash", "left").select(
+        "sim_hash",
+        "t",
+        "pressure",
+        "s",
+        "pos",
+        F.explode(F.sequence(F.lit(0), F.lit(ncells - 1))).alias("c"),
+    )
+    row = F.get("pos", "c")
+    pair = F.get("s", row)
+    cell_id = F.col("c").cast("bigint")
+    i, j, k = ijk_exprs(cell_id, ni, nj)
+    return scattered.select(
+        "sim_hash",
+        "t",
+        cell_id.alias("cell_id"),
+        i,
+        j,
+        k,
+        F.get("pressure", row).alias("pressure"),
+        pair.getItem(0).alias("sw"),
+        pair.getItem(1).alias("sg"),
+    )
 
 
 def write_golden(golden: DataFrame, path: str) -> None:
     """Persist golden as Parquet partitioned by sim_hash, sorted within
     partitions by (t, cell_id) → partition pruning on sim_hash, row-group
-    skipping on t."""
+    skipping on t.
+
+    The sort leads with sim_hash because the partitioned write requires
+    that order; a sort without it is replaced by the writer's own sort on
+    sim_hash alone, which loses (t, cell_id).
+
+    No repartition: ingest_golden already holds each sim's rows in one
+    task. One bronze file is one sim, read as one wholetext row by one task,
+    and the join keeps each row in that task (broadcast) or moves all rows of
+    a sim_hash to the same task (hash join). Each sim_hash directory thus
+    gets exactly one file.
+    """
     (
-        golden.repartition("sim_hash")
-        .sortWithinPartitions("t", "cell_id")
+        golden.sortWithinPartitions("sim_hash", "t", "cell_id")
         .write.mode("overwrite")
         .partitionBy("sim_hash")
         .parquet(path)

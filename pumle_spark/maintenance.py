@@ -55,7 +55,9 @@ def compact_golden(
     shutil.rmtree(tmp, ignore_errors=True)
     (
         golden.repartition("sim_hash")
-        .sortWithinPartitions("t", "cell_id")
+        # sim_hash leads: the partitioned write needs it first and would
+        # otherwise replace this sort with its own (ingest.write_golden)
+        .sortWithinPartitions("sim_hash", "t", "cell_id")
         .write.mode("overwrite")
         .option("maxRecordsPerFile", max_records_per_file)
         .partitionBy("sim_hash")

@@ -24,8 +24,8 @@ from_json never materializes it.
 At 100 TB: bronze JSON is the interop format, not the analytics format —
 ingest.py converts it once into golden Parquet partitioned by sim_hash, and
 every query runs against Parquet. Each bronze file is one task; a fleet of
-N simulations ingests with N-way parallelism and zero shuffle until the
-active-cell join.
+N simulations ingests with N-way parallelism, and with no shuffle while
+ACTNUM is small enough to reach the states rows as a broadcast.
 """
 
 from __future__ import annotations
@@ -76,16 +76,21 @@ def read_grid_dims(spark: SparkSession, path: str) -> tuple[int, int, int]:
     return int(dims[0]), int(dims[1]), int(dims[2])
 
 
-def read_actnum(spark: SparkSession, glob: str) -> DataFrame:
-    """S4: ACTNUM scan → (sim_hash, cell_id, active).
+def read_actnum_arrays(spark: SparkSession, glob: str) -> DataFrame:
+    """S4: ACTNUM scan → (sim_hash, actnum), one row per sim.
 
     The grdecl JSON is a flat 0/1 array whose position IS the F-order
     cell_id (co2lab3DPUMLE.m:534; consumed sim_results_parser.py:197-224).
     """
-    raw = spark.read.text(glob, wholetext=True).select(
+    return spark.read.text(glob, wholetext=True).select(
         F.regexp_extract(F.input_file_name(), _HASH_FROM_GRDECL, 1).alias("sim_hash"),
         F.from_json("value", ArrayType(DoubleType())).alias("actnum"),
     )
+
+
+def read_actnum(spark: SparkSession, glob: str) -> DataFrame:
+    """S4 exploded: (sim_hash, cell_id, active), one row per cell."""
+    raw = read_actnum_arrays(spark, glob)
     return raw.select("sim_hash", F.posexplode("actnum").alias("cell_id", "active_raw")).select(
         "sim_hash",
         F.col("cell_id").cast("bigint").alias("cell_id"),

@@ -4,7 +4,10 @@ NumPy reference oracle stays test-only."""
 
 from __future__ import annotations
 
+from pathlib import Path
+
 import numpy as np
+import pyarrow.parquet as pq
 
 from pumle_spark.fixtures import CASE, DIMS, make_bronze  # noqa: F401  (re-export)
 
@@ -27,3 +30,15 @@ def numpy_golden_oracle(sims: dict, n_t: int):
             arrs["sg"][idx[:n], t] = s[:n, 1]
         out[h] = arrs
     return out
+
+
+def unsorted_golden_files(path) -> list[str]:
+    """Part files of a golden tree whose rows are not in (t, cell_id) order,
+    the order row-group skipping on t relies on."""
+    bad = []
+    for f in sorted(Path(path).glob("sim_hash=*/*.parquet")):
+        tbl = pq.read_table(f, columns=["t", "cell_id"])
+        keys = list(zip(tbl["t"].to_pylist(), tbl["cell_id"].to_pylist()))
+        if keys != sorted(keys):
+            bad.append(str(f))
+    return bad

@@ -396,7 +396,7 @@ def test_compact_golden_merges_small_files_preserves_rows(spark, tmp_path):
 
     from pumle_spark.ingest import ingest_golden, read_golden
     from pumle_spark.maintenance import compact_golden, golden_file_stats
-    from tests.fixtures import CASE, make_bronze
+    from tests.fixtures import CASE, make_bronze, unsorted_golden_files
 
     sims = make_bronze(tmp_path / "b", n_sims=3, n_t=3, seed=55)
     g = ingest_golden(
@@ -419,6 +419,7 @@ def test_compact_golden_merges_small_files_preserves_rows(spark, tmp_path):
 
     assert rows_before == rows_after
     assert all(n == 1 for n in after.values())  # litter merged per partition
+    assert not unsorted_golden_files(path)  # (t, cell_id) order restored
     assert not glob.glob(path + "._*")  # no temp trees left behind
 
     h = next(iter(sims))

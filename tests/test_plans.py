@@ -92,6 +92,26 @@ def test_golden_write_partition_pruning(spark, tmp_path):
     assert "PartitionFilters: [isnotnull(sim_hash" in plan
 
 
+def test_ingest_golden_scans_once_without_cell_joins(spark, tmp_path):
+    """Bronze→golden reads each source once and scatters by array lookup:
+    no sort-merge join and no cross product over the cells."""
+    from pumle_spark.ingest import ingest_golden
+    from tests.fixtures import CASE, make_bronze
+
+    make_bronze(tmp_path / "b", n_sims=3, n_t=2, seed=43)
+    g = ingest_golden(
+        spark,
+        str(tmp_path / f"b/states_{CASE}_*.json"),
+        str(tmp_path / f"b/grdecl_{CASE}_*.json"),
+        str(tmp_path / f"b/g_{CASE}.json"),
+    )
+    plan = g._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("FileScan text") == 2, plan
+    assert "SortMergeJoin" not in plan
+    assert "CartesianProduct" not in plan
+    assert "BroadcastNestedLoopJoin" not in plan
+
+
 def test_salted_join_equals_plain_join(spark):
     from pumle_spark.operators.skew import salted_join
 
